@@ -2,7 +2,7 @@
 
 ``localCheckpoint`` is the right lineage-truncation tool in local
 mode and on dedicated executors: it is eager, it truncates the
-analyzed plan to a constant size (the i10/CC lesson — a persisted
+analyzed plan to a constant size (the CC-loop lesson — a persisted
 loop frame still embeds the whole upstream tree and Spark
 re-stringifies it per job), and it costs no external storage. But it
 stores its blocks ONLY on executors with NO lineage left to

@@ -760,7 +760,11 @@ def _o_lsh_ctes(
     are generated from the parameters, so the oracle tracks any
     change to the shared LSH_* constants above. ``src`` names the
     relation scanned (any CTE/view with doc_id + text — l70 feeds
-    the exact-dedup survivors instead of raw documents)."""
+    the exact-dedup survivors instead of raw documents). ``sigs`` is
+    MATERIALIZED: DuckDB would otherwise inline its 64 signature
+    columns into each ``banded`` UNION ALL branch and both verify
+    joins, and l70's oracle then exhausted DuckDB's default memory
+    limit at sf0.001."""
     rows_per_band = num_hashes // bands
     params = _hash_params(num_hashes)
     sig_cols = ",\n             ".join(
@@ -788,7 +792,7 @@ def _o_lsh_ctes(
                s -> CAST(('0x' || substring(md5(s), 1, 15))::UBIGINT AS BIGINT)
                     % {_P}) AS hs
       FROM shingled
-    ), sigs AS (
+    ), sigs AS MATERIALIZED (
       SELECT doc_id, shingles,
              {sig_cols}
       FROM hashed

@@ -9,12 +9,15 @@ hand-built MapReduce machinery maps to a Catalyst physical feature.
 
 from __future__ import annotations
 
+from collections import Counter, defaultdict
+from collections.abc import Callable
+
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_release_spark.catalog import table
 from hadoop_release_spark.functions.contracts import dsum, net_price, osum
-from hadoop_release_spark.functions.materialize import eager_truncate
 from hadoop_release_spark.plans.registry import register
 
 
@@ -238,12 +241,79 @@ def i09_mr_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst) = (supplier nation, customer nation) of every
+    cross-nation lineitem — the c13 star join lineitem ⋈ orders ⋈
+    customer ⋈ supplier, NOT deduplicated. It is the trade graph of
+    i10–i14 and the only part of them that grows with the data; each
+    caller applies its own ``distinct()`` (directed) or
+    least/greatest projection (undirected)."""
+    li = table(spark, sf_dir, "lineitem")
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
+    s = table(spark, sf_dir, "supplier")
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .filter(F.col("s_nationkey") != F.col("c_nationkey"))
+        .select(F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst"))
+    )
+
+
+def _on_nation_graph(
+    spark: SparkSession,
+    sf_dir: str,
+    kernel: Callable[[pd.DataFrame, pd.DataFrame], pd.DataFrame],
+    schema: str,
+) -> DataFrame:
+    """Run ``kernel(edges, nation)`` once, in ONE task, over the whole
+    trade graph: the distinct edge list and the nation keys are
+    cogrouped on one constant key. The graph is bounded by the nation
+    domain at every scale factor (≤ 25 nodes, ≤ 25·24 = 600 directed
+    edges; catalog.BROADCAST_DIMS), so the whole recurrence fits one
+    Python worker — the Hadoop "one reducer for the small state" step
+    (l21 k-means states the same bounded-state argument). The edge
+    extraction below it stays distributed. The plan is lazy: nothing
+    runs and nothing persists until the caller materializes it."""
+    # A named literal: groupBy(F.lit(0)) would be read as an ordinal.
+    one = F.lit(0).alias("g")
+    edges = _trade_pairs(spark, sf_dir).distinct()
+    nation = table(spark, sf_dir, "nation").select("n_nationkey")
+    return edges.groupBy(one).cogroup(nation.groupBy(one)).applyInPandas(kernel, schema)
+
+
+def _edge_list(edges: pd.DataFrame) -> list[tuple[int, int]]:
+    return list(zip(edges["src"].tolist(), edges["dst"].tolist()))
+
+
 #: i10 PageRank constants — all-integer arithmetic so five chained
 #: iterations stay bit-identical across engines (scaled ranks;
 #: damping 0.85 applied as (85·x) DIV 100).
 PR_BASE = 1_000_000_000
 PR_TELEPORT = 150_000_000  # 0.15 × PR_BASE
 PR_ITERS = 5
+
+
+def pagerank_kernel(edges: pd.DataFrame, nation: pd.DataFrame) -> pd.DataFrame:
+    """PR_ITERS integer PageRank rounds over the distinct ``edges``
+    (src, dst), one output row per ``nation`` row. Every node starts
+    at PR_BASE. Out-degree counts all of src's edges, but rank flows
+    only between nation nodes (the oracle's inner joins), and a node
+    with no in-edges keeps the teleport rank."""
+    pairs = _edge_list(edges)
+    outdeg = Counter(src for src, _ in pairs)
+    nodes = nation["n_nationkey"].tolist()
+    pr = dict.fromkeys(nodes, PR_BASE)
+    for _ in range(PR_ITERS):
+        incoming = dict.fromkeys(nodes, 0)
+        for src, dst in pairs:
+            if src in pr and dst in incoming:
+                incoming[dst] += pr[src] // outdeg[src]
+        pr = {v: PR_TELEPORT + (85 * incoming[v]) // 100 for v in nodes}
+    return pd.DataFrame(
+        {"n_nationkey": nation["n_nationkey"], "pagerank_scaled": [pr[v] for v in nodes]}
+    )
 
 
 def _pagerank_oracle() -> str:
@@ -288,74 +358,18 @@ def i10_mr_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     float accumulation (l21 kmeans) cannot. Dangling-node mass is
     dropped (standard simplification), teleport keeps ranks alive.
 
-    Scale shape: the edge list is derived once (4-way join, the c13
-    star shape) and persisted; each iteration is one broadcast-able
-    join (ranks: one row per node ≪ edges) + one partial-agg'd
-    groupBy(dst). Each iteration's rank table is EAGERLY
-    materialized via localCheckpoint — without eager
-    materialization, iteration k's broadcast re-executes the whole
-    k−1-deep lineage and the loop goes quadratic (measured 108 s →
-    ~2 s at sf0.1); and versus the earlier persist()+count() form,
-    localCheckpoint additionally TRUNCATES the lineage, so the
-    analyzed plan stays constant-size instead of growing one full
-    iteration-history per round (the r8 union-find lesson applied
-    here: the persist form's final plan carried 1304 Exchange nodes
-    and ~0.8 MB of explain text, and re-analyzing it on every
-    materialization measured 3.41 → 2.16 s median at sf0.1 when
-    truncated, bit-identical output). The materialized state is one
-    row per node — the same bounded-state argument as l21's k
-    centroids — and stays distributed (checkpoint blocks, not a
-    collect). At web scale (nodes ≫ broadcast) the same loop runs
-    with edges hash-partitioned by src and ranks co-partitioned —
-    the shuffle per iteration carries one contrib row per edge,
-    compressed by map-side combine to one per (task, dst)."""
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer")
-    s = table(spark, sf_dir, "supplier")
-    n = table(spark, sf_dir, "nation")
-
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .filter(F.col("s_nationkey") != F.col("c_nationkey"))
-        .select(F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst"))
-        .distinct()
+    Scale shape: the edge extraction (the 4-way star join and a
+    distinct) is distributed and is the only part that grows with
+    the data. The graph it yields is bounded by the nation domain,
+    so all PR_ITERS rounds run in one task (:func:`pagerank_kernel`
+    via :func:`_on_nation_graph`), out-degree included: one lazy
+    plan, no Spark action per round, nothing persisted. A graph
+    whose node set grows with the data instead iterates distributed
+    joins with per-round lineage truncation, as the l22
+    connected-components loop does (operators/dedup.py)."""
+    return _on_nation_graph(
+        spark, sf_dir, pagerank_kernel, "n_nationkey int, pagerank_scaled bigint"
     )
-    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    # eager_truncate on the loop state: materializes like
-    # persist+count AND truncates lineage so each iteration's plan is
-    # constant-size (see docstring; the checkpoint blocks are released
-    # by the registry wrapper's unpersist sweep at the next query,
-    # same lifetime contract as the old persists). r16: the helper
-    # picks localCheckpoint in local mode but RELIABLE checkpoint()
-    # when a checkpoint dir is configured — localCheckpoint blocks
-    # die with a lost executor and the truncated lineage cannot
-    # recompute them (functions/materialize.py).
-    ed = eager_truncate(edges.join(deg, "src"))
-
-    nodes = eager_truncate(n.select(F.col("n_nationkey").alias("node")))
-    ranks = nodes.select("node", F.lit(PR_BASE).cast("bigint").alias("pr"))
-    for _ in range(PR_ITERS):
-        contrib = (
-            ed.join(ranks, ed.src == ranks.node)
-            .select("dst", F.expr("pr DIV outdeg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            nodes.alias("n")
-            .join(contrib.alias("ct"), F.col("n.node") == F.col("ct.dst"), "left")
-            .select(
-                F.col("n.node").alias("node"),
-                (F.lit(PR_TELEPORT) + F.expr("(85 * coalesce(s, 0)) DIV 100"))
-                .cast("bigint")
-                .alias("pr"),
-            )
-        )
-        ranks = eager_truncate(ranks)  # eager + lineage-truncating (docstring)
-    return ranks.select(F.col("node").alias("n_nationkey"), F.col("pr").alias("pagerank_scaled"))
 
 
 @register(
@@ -410,21 +424,11 @@ def i11_mr_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     at O(sqrt(edges)) per node; the fixture's 25-node graph needs no
     such refinement. No cartesian anywhere — closure is an equi-join
     on (u, v) pairs."""
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer")
-    s = table(spark, sf_dir, "supplier")
     n = table(spark, sf_dir, "nation")
 
     und = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .filter(F.col("s_nationkey") != F.col("c_nationkey"))
-        .select(
-            F.least("s_nationkey", "c_nationkey").alias("u"),
-            F.greatest("s_nationkey", "c_nationkey").alias("v"),
-        )
+        _trade_pairs(spark, sf_dir)
+        .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
         .distinct()
         # persist: the wedge/closure joins reference the edge list
         # THREE times — without caching, each alias re-executes the
@@ -458,6 +462,27 @@ def i11_mr_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: i12 — BFS unroll depth (levels beyond the seed).
 BFS_LEVELS = 3
 BFS_SEED = 0
+
+
+def bfs_kernel(edges: pd.DataFrame, nation: pd.DataFrame) -> pd.DataFrame:
+    """Minimum hop count from BFS_SEED within BFS_LEVELS levels over
+    the directed ``edges``, one output row per ``nation`` row, −1 when
+    unreached. The seed is a node only when ``nation`` holds it (else
+    every node is −1); levels expand along every edge, each level
+    being all dsts of the previous level's nodes."""
+    out: dict[int, set[int]] = defaultdict(set)
+    for src, dst in _edge_list(edges):
+        out[src].add(dst)
+    nodes = nation["n_nationkey"].tolist()
+    frontier = {BFS_SEED} & set(nodes)
+    hops = dict.fromkeys(frontier, 0)
+    for k in range(1, BFS_LEVELS + 1):
+        frontier = {dst for src in frontier for dst in out[src]}
+        for v in frontier:
+            hops.setdefault(v, k)
+    return pd.DataFrame(
+        {"n_nationkey": nation["n_nationkey"], "hops": [hops.get(v, -1) for v in nodes]}
+    )
 
 
 @register(
@@ -503,64 +528,35 @@ def i12_mr_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNROLLED into CTE levels — the i10 trick for hash-checking an
     iterative algorithm.
 
-    Scale shape: the frontier is node-bounded (≤ |nodes| rows), so
-    each round is a broadcast-able join against the edge list
-    followed by a distinct — the Pregel message step. Visited-set
-    pruning (joining out already-seen nodes) keeps frontiers
-    shrinking; at billion-edge scale the same loop runs with edges
-    hash-partitioned by src and the frontier co-partitioned instead
-    of broadcast (identical plan shape, bigger exchange), which is
-    exactly Pregel-on-shuffle."""
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer")
-    s = table(spark, sf_dir, "supplier")
-    n = table(spark, sf_dir, "nation")
-
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .filter(F.col("s_nationkey") != F.col("c_nationkey"))
-        .select(F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst"))
-        .distinct()
-        .persist()  # referenced once per level; node²-bounded
-    )
-    # Seed from the node table (not a literal row): a scan-derived
-    # frontier keeps every level a real broadcast HASH join — a
-    # constant-folded literal degrades the first level to a
-    # nested-loop plan.
-    frontier = n.filter(F.col("n_nationkey") == BFS_SEED).select(
-        F.col("n_nationkey").alias("node")
-    )
-    levels = frontier.select("node", F.lit(0).alias("dist"))
-    for k in range(1, BFS_LEVELS + 1):
-        frontier = (
-            edges.join(
-                F.broadcast(frontier.withColumnRenamed("node", "src")), "src"
-            )
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            # Eager materialization per level (the i10 discipline):
-            # without it level k's broadcast re-executes the whole
-            # k−1-deep join lineage and the loop goes quadratic in
-            # depth. State is node-bounded; released by the registry
-            # wrapper before the next query.
-            .persist()
-        )
-        frontier.count()
-        levels = levels.unionAll(frontier.select("node", F.lit(k).alias("dist")))
-    dist = levels.groupBy("node").agg(F.min("dist").alias("dist"))
-    return n.join(dist, n.n_nationkey == dist.node, "left").select(
-        "n_nationkey",
-        F.coalesce(F.col("dist"), F.lit(-1)).cast("bigint").alias("hops"),
-    )
+    Scale shape: as i10 — the edge extraction is distributed, and
+    because the graph is bounded by the nation domain all BFS_LEVELS
+    frontier expansions run in one task (:func:`bfs_kernel` via
+    :func:`_on_nation_graph`): one lazy plan, no action per level."""
+    return _on_nation_graph(spark, sf_dir, bfs_kernel, "n_nationkey int, hops bigint")
 
 
 #: i13 — label-propagation rounds (graph diameter bound for the
 #: 25-node trade graph; a convergence loop with a raise — the l22
 #: discipline — replaces the fixed unroll on unbounded graphs).
 CC_ROUNDS = 3
+
+
+def components_kernel(edges: pd.DataFrame, nation: pd.DataFrame) -> pd.DataFrame:
+    """CC_ROUNDS synchronous min-label rounds over ``edges`` taken
+    undirected, one output row per ``nation`` row. Each nation node
+    starts with its own key as label and takes the least label among
+    itself and its nation neighbours; a node with none keeps its own."""
+    nbrs: dict[int, set[int]] = defaultdict(set)
+    for src, dst in _edge_list(edges):
+        nbrs[src].add(dst)
+        nbrs[dst].add(src)
+    nodes = nation["n_nationkey"].tolist()
+    lbl = {v: v for v in nodes}
+    for _ in range(CC_ROUNDS):
+        lbl = {v: min([lbl[v]] + [lbl[u] for u in nbrs[v] if u in lbl]) for v in nodes}
+    return pd.DataFrame(
+        {"n_nationkey": nation["n_nationkey"], "component": [lbl[v] for v in nodes]}
+    )
 
 
 @register(
@@ -612,65 +608,16 @@ def i13_mr_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the i10/i12 trick). The fixed unroll is the fixture's diameter
     bound; the unbounded-graph variant is l22's convergence loop
     (operators/dedup.py), which RAISES if labels haven't stabilized
-    — same per-round plan, checked termination.
+    — the same min-label round as a distributed join, with checked
+    termination.
 
-    Scale shape: per round, one join of labels against the
-    symmetrized edge list + a min agg — labels are node-bounded
-    (broadcast-able here; co-partitioned by node id at billion-node
-    scale, where each round's shuffle carries one label per edge,
-    combiner-compressed per (task, node))."""
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer")
-    s = table(spark, sf_dir, "supplier")
-    n = table(spark, sf_dir, "nation")
-
-    und = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .filter(F.col("s_nationkey") != F.col("c_nationkey"))
-        .select(
-            F.least("s_nationkey", "c_nationkey").alias("u"),
-            F.greatest("s_nationkey", "c_nationkey").alias("v"),
-        )
-        .distinct()
-    )
-    sym = und.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
-        und.select(F.col("v").alias("a"), F.col("u").alias("b"))
-    ).persist()  # referenced once per round; edge-bounded
-
-    labels = n.select(
-        F.col("n_nationkey").alias("node"), F.col("n_nationkey").alias("lbl")
-    )
-    prev = None
-    for _ in range(CC_ROUNDS):
-        neighbor_min = (
-            sym.join(
-                F.broadcast(labels.withColumnRenamed("node", "b").withColumnRenamed("lbl", "nl")),
-                "b",
-            )
-            .groupBy(F.col("a").alias("node"))
-            .agg(F.min("nl").alias("nmin"))
-        )
-        labels = (
-            labels.join(F.broadcast(neighbor_min), "node", "left")
-            .select(
-                "node",
-                F.least(F.col("lbl"), F.coalesce(F.col("nmin"), F.col("lbl"))).alias("lbl"),
-            )
-            # Eager materialization per round (the i10 discipline):
-            # round k's two broadcasts would otherwise re-execute the
-            # whole k−1-deep lineage. One row per node; released by
-            # the registry wrapper before the next query.
-            .persist()
-        )
-        labels.count()
-        if prev is not None:
-            prev.unpersist()
-        prev = labels
-    return labels.select(
-        F.col("node").alias("n_nationkey"), F.col("lbl").cast("bigint").alias("component")
+    Scale shape: as i10 — the edge extraction is distributed, and
+    because the graph is bounded by the nation domain all CC_ROUNDS
+    rounds run in one task (:func:`components_kernel` via
+    :func:`_on_nation_graph`), which symmetrizes the directed edge
+    list itself: one lazy plan, no action per round."""
+    return _on_nation_graph(
+        spark, sf_dir, components_kernel, "n_nationkey int, component bigint"
     )
 
 
@@ -771,21 +718,11 @@ def i14_mr_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg with map-side partials. The edge list derives once and
     persists; the fixed small unroll compiles into one declarative
     plan (see below)."""
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer")
-    s = table(spark, sf_dir, "supplier")
     n = table(spark, sf_dir, "nation")
 
     und = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .filter(F.col("s_nationkey") != F.col("c_nationkey"))
-        .select(
-            F.least("s_nationkey", "c_nationkey").alias("u"),
-            F.greatest("s_nationkey", "c_nationkey").alias("v"),
-        )
+        _trade_pairs(spark, sf_dir)
+        .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
         .distinct()
     )
     edges = und.filter(F.expr(_KCORE_THIN)).persist()
@@ -816,9 +753,9 @@ def i14_mr_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle's unrolled CTEs): with KCORE_ROUNDS bounded and the edge
     # list cached, letting Catalyst see the whole 3-round join tree
     # costs one plan compile and one job (measured 4 s vs 10 s with
-    # per-round persist+count on this VM's job overhead). The
-    # per-round eager-materialization discipline (i10/i12) remains
-    # the right shape when the round count is UNBOUNDED.
+    # per-round persist+count on this VM's job overhead). Per-round
+    # eager materialization (the l22 connected-components loop)
+    # remains the right shape when the round count is UNBOUNDED.
     survivors = edges.select(F.explode(F.array("u", "v")).alias("node")).distinct()
     for _ in range(KCORE_ROUNDS):
         survivors = degrees(survivors).filter(F.col("d") >= KCORE_K).select("node")

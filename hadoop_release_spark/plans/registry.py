@@ -139,26 +139,30 @@ def _wrap(fn: QueryFn) -> QueryFn:
             from hadoop_release_spark.streaming import runner as _stream_runner
 
             kept = []
-            while _stream_runner._LIVE_VIEWS:
-                ref, name = _stream_runner._LIVE_VIEWS.pop()
-                owner = ref()
-                if owner is None:
-                    continue  # session gone; its temp views died with it
-                if owner is not spark:
-                    # r15 ADVICE: a view owned by ANOTHER live session
-                    # must not be popped here — dropTempView on this
-                    # session would return False and the view would
-                    # leak permanently in its owner.
-                    kept.append((ref, name))
-                    continue
-                try:
-                    spark.catalog.dropTempView(name)
-                except Exception:
-                    # keep the name so a later sweep can retry instead
-                    # of losing track of the view (r15 ADVICE)
-                    kept.append((ref, name))
-                    raise
-            _stream_runner._LIVE_VIEWS.extend(kept)
+            try:
+                while _stream_runner._LIVE_VIEWS:
+                    ref, name = _stream_runner._LIVE_VIEWS.pop()
+                    owner = ref()
+                    if owner is None:
+                        continue  # session gone; its temp views died with it
+                    if owner is not spark:
+                        # r15 ADVICE: a view owned by ANOTHER live session
+                        # must not be popped here — dropTempView on this
+                        # session would return False and the view would
+                        # leak permanently in its owner.
+                        kept.append((ref, name))
+                        continue
+                    try:
+                        spark.catalog.dropTempView(name)
+                    except Exception:
+                        # keep the name so a later sweep can retry instead
+                        # of losing track of the view (r15 ADVICE)
+                        kept.append((ref, name))
+                        raise
+            finally:
+                # also on a failed drop: every name moved into `kept`
+                # goes back to tracking
+                _stream_runner._LIVE_VIEWS.extend(kept)
         except Exception as exc:  # pragma: no cover - env-specific
             warnings.warn(f"registry cleanup: view drop failed: {exc!r}")
         # Operator-internal persist registry (r15 ADVICE): the RDD
@@ -324,6 +328,14 @@ def grading_order(names: list[str]) -> list[str]:
 #: driver window, post-rewrite (CORRECTNESS_r13.json, 12/12) —
 #: pruned round 14.
 _PLAN_REWRITES: dict[str, int] = {
+    # round-17: the nation-graph loops became one lazy plan — the
+    # distributed edge derivation cogrouped with nation into a
+    # one-task applyInPandas kernel that runs the whole integer
+    # recurrence (no per-round persist/checkpoint, no build-time
+    # jobs). No r17 grade at change time → recorded as 17.
+    "i10_mr_pagerank": 17,
+    "i12_mr_bfs": 17,
+    "i13_mr_components": 17,
     # round-14: _shingles3 (l13's gram expression) gained the
     # sub-3-token guard branch (ADVICE item 2 — the descending
     # sequence/element_at(0) latent crash). Values identical for

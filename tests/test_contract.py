@@ -251,6 +251,35 @@ def test_stream_views_do_not_accumulate_across_queries(spark, sf_dir):
         assert not spark.catalog.tableExists(name), f"view {name} leaked"
 
 
+def test_view_drain_keeps_tracking_when_drop_fails(spark, monkeypatch):
+    """A dropTempView failure during the wrapper's view drain must
+    leave every tracked name tracked — the view whose drop failed and
+    the other session's view already set aside — so a later sweep can
+    retry. The failure surfaces as a cleanup warning, not an error."""
+    import weakref
+
+    from hadoop_release_spark.plans import registry
+    from hadoop_release_spark.streaming import runner
+
+    other = spark.newSession()
+    tracked = [
+        (weakref.ref(spark), "stream_out_kept"),
+        (weakref.ref(spark), "stream_out_failing"),
+        (weakref.ref(other), "stream_out_other_session"),
+    ]
+    monkeypatch.setattr(runner, "_LIVE_VIEWS", list(tracked))
+
+    def failing_drop(name):
+        raise RuntimeError(f"injected dropTempView failure for {name}")
+
+    monkeypatch.setattr(spark.catalog, "dropTempView", failing_drop)
+    with pytest.warns(UserWarning, match="view drop failed"):
+        registry._wrap(lambda s, d: None)(spark, "unused")
+    assert sorted(name for _, name in runner._LIVE_VIEWS) == sorted(
+        name for _, name in tracked
+    )
+
+
 def test_survey_section2_matches_registry():
     """SURVEY.md §2 is the capability contract the judge audits line
     by line — its operator rows and the registry must be identical
@@ -335,7 +364,7 @@ def test_eager_truncate_modes_identical(spark, tmp_path):
     checkpoint() when a checkpoint dir is configured and
     localCheckpoint otherwise, (b) produce identical rows in both
     modes, and (c) be eager + lineage-truncating in both (the loop
-    operators' contract — i10/l70/CC ride this helper)."""
+    operators' contract — l70 and the CC loop ride this helper)."""
     from hadoop_release_spark.functions.materialize import eager_truncate
     from pyspark.sql import functions as F
 

@@ -14,7 +14,7 @@ import datetime
 
 import duckdb
 import pandas as pd
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from tests._harness import canon
@@ -134,6 +134,10 @@ def test_decimal_sum_determinism(spark, xs):
 
 @settings(**_SETTINGS)
 @given(st.lists(st.tuples(keys, money), min_size=2, max_size=100))
+@example([(1, 0.0), (1, 3806.5)])
+@example([(1, 0.0), (1, 2.5)])
+@example([(1, 0.0), (1, -0.5)])
+@example([(1, 0.0), (1, 3807.5)])
 def test_truncating_cast_rule(spark, rows):
     # Rule 7: bare double→int casts DIVERGE (Spark truncates, DuckDB
     # rounds); the contract-safe floor() form must agree. Pin both.
@@ -146,12 +150,13 @@ def test_truncating_cast_rule(spark, rows):
     duck_cast = [r[0] for r in con.execute("SELECT CAST(x AS BIGINT) FROM t").fetchall()]
     con.close()
     assert [float(v) for v in spark_floor] == [float(v) for v in duck_floor]
-    # DuckDB's cast ROUNDS half-away-from-zero; it differs from floor
-    # exactly when x - floor(x) > 0.5, or == 0.5 with x positive
-    # (e.g. floor(-1.2) = -2 vs round = -1; floor(-0.5) = round = -1).
+    # DuckDB 1.0.0's cast ROUNDS, exact halves to even; it differs
+    # from floor exactly when x - floor(x) > 0.5, or == 0.5 with
+    # floor(x) odd (floor(-1.2) = -2 vs round = -1; 3806.5 → 3806 and
+    # 2.5 → 2 agree with floor, -0.5 → 0 and 3807.5 → 3808 do not).
     import math
 
     diverges = any(f != c for f, c in zip(duck_floor, duck_cast) if c is not None)
-    frac = [(x - math.floor(x), x) for _, x in rows]
-    should_diverge = any(fr > 0.5 or (fr == 0.5 and x > 0) for fr, x in frac)
+    frac = [(x - math.floor(x), math.floor(x)) for _, x in rows]
+    should_diverge = any(fr > 0.5 or (fr == 0.5 and fl % 2) for fr, fl in frac)
     assert diverges == should_diverge
